@@ -33,7 +33,7 @@ import sys
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .constants import SENTINEL_AGEB_13
-from .operators.colocation import colocation_edges, colocation_pairs
+from .operators.colocation import colocation_edges
 from .operators.components import connected_components_star
 from .operators.contacts import group_sizes
 from .operators.graphs import (

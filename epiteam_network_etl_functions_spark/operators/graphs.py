@@ -39,17 +39,23 @@ def scale_sizes(sizes: dict[str, int], target_n: int) -> dict[str, int]:
         if scaled[b] == 0:
             scaled[b] = 1
     diff = target_n - sum(scaled.values())
-    by_size = sorted(blocks, key=lambda b: (-scaled[b], b))[:10]
-    i = 0
-    while diff != 0 and by_size:
-        b = by_size[i % len(by_size)]
-        step = 1 if diff > 0 else -1
+    step = 1 if diff > 0 else -1
+    by_size = sorted(blocks, key=lambda b: (-scaled[b], b))
+    # round-robin over the ten largest blocks; a surplus those ten cannot
+    # shed (all down to 1) moves on to the next ten, and so on —
+    # target_n >= n_blocks leaves enough nodes above 1 to shed it all
+    start = i = 0
+    while diff != 0:
+        window = by_size[start : start + 10]
+        if step < 0 and all(scaled[b] == 1 for b in window):
+            start += 10
+            i = 0
+            continue
+        b = window[i % len(window)]
         if scaled[b] + step >= 1:
             scaled[b] += step
             diff -= step
         i += 1
-        if i > 10 * abs(target_n):  # safety, unreachable in practice
-            raise RuntimeError("scaling did not converge")
     assert sum(scaled.values()) == target_n  # size_scalers.py:48,100,160
     return scaled
 

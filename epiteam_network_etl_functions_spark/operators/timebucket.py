@@ -36,6 +36,11 @@ def with_time_bucket(
     float — bucket edges must be bit-identical to the SQL oracle.
     """
     period_us = int(seconds) * 1_000_000
+    if dict(df.dtypes).get(ts_col) == "timestamp_ntz":
+        # tz-naive parquet surfaces as TIMESTAMP_NTZ under Spark 4, and
+        # unix_micros() requires TIMESTAMP. The session is pinned to UTC,
+        # so the cast is value-exact (same rule as catalog.load).
+        df = df.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
     if origin_us is None:
         origin = df.select(F.min(F.unix_micros(F.col(ts_col))).alias("__origin_us"))
         df = df.crossJoin(F.broadcast(origin))

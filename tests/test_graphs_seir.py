@@ -3,6 +3,7 @@ properties, SURVEY.md §5)."""
 
 from __future__ import annotations
 
+import numpy as np
 import pytest
 from pyspark.sql import Row, functions as F
 
@@ -30,6 +31,44 @@ def test_scale_sizes_sums_to_target():
 def test_scale_sizes_deterministic():
     sizes = {"a": 17, "b": 29, "c": 54}
     assert scale_sizes(sizes, 1000) == scale_sizes(sizes, 1000)
+
+
+def _zipf_blocks(n_blocks: int = 1025, total: int = 20000) -> dict[str, int]:
+    w = 1 / np.arange(1, n_blocks + 1)
+    return {
+        f"09{1000000 + b:011d}": int(max(1, round(x * total / w.sum())))
+        for b, x in enumerate(w)
+    }
+
+
+@pytest.mark.parametrize(
+    "sizes, target",
+    [
+        # a surplus larger than the ten largest blocks can shed
+        (_zipf_blocks(), 1025),
+        (_zipf_blocks(), 1100),
+        ({f"b{i}": 3 for i in range(256)}, 500),
+        ({f"b{i}": 3 for i in range(256)}, 700),
+    ],
+    ids=["zipf1025-1025", "zipf1025-1100", "256x3-500", "256x3-700"],
+)
+def test_scale_sizes_converges_near_block_count(sizes, target):
+    scaled = scale_sizes(sizes, target)
+    assert scaled.keys() == sizes.keys()
+    assert sum(scaled.values()) == target
+    assert min(scaled.values()) >= 1
+    if target == len(sizes):
+        assert set(scaled.values()) == {1}
+
+
+def test_scale_sizes_surplus_round_robin_pinned():
+    # 256 blocks of 3 -> 1000: 4 each overshoots by 24, shed round-robin
+    # over the ten largest (name order breaks the size tie)
+    sizes = {f"b{i}": 3 for i in range(256)}
+    expected = {b: 4 for b in sizes}
+    expected.update({b: 1 for b in ("b0", "b1", "b10", "b100")})
+    expected.update({f"b{i}": 2 for i in range(101, 107)})
+    assert scale_sizes(sizes, 1000) == expected
 
 
 def test_sbm_edges_respects_blocks(spark):

@@ -98,30 +98,24 @@ def test_entry_smoke(spark):
     assert df.columns
 
 
-def test_driver_prefix_is_exactly_the_uncertified_set():
-    """The external driver snapshots the first 50 registered names; a green
-    row in any round certifies a query permanently. Invariant: the prefix
-    must be exactly the non-demoted set (every never-certified query inside,
-    nothing wasted on already-certified proxies), each with an oracle —
-    a registration-order drift would silently burn certification slots."""
-    from epiteam_network_etl_functions_spark import workload
+def test_every_oracle_backed_query_is_certified():
+    """The union of the driver's CORRECTNESS_r*.json rows is the
+    certification record: every registered query that has an oracle must
+    have a green (hash-matching) row in at least one of them. A new
+    oracle-backed query stays red here until a driver run certifies it."""
+    import glob
+    import json
+    import os
 
-    workload.load_all()
-    names = list(workload.REGISTRY)
-    fresh = [
-        n
-        for n in names
-        if n not in workload.DEMOTED and n not in workload.DEFERRED
-    ]
-    assert len(fresh) <= 50, (
-        f"{len(fresh)} uncertified non-deferred queries exceed the 50-slot "
-        "driver prefix — demote certified proxies (or defer late additions) "
-        "before adding more"
-    )
-    assert names[: len(fresh)] == fresh
-    # the DEFERRED tier sits immediately after the prefix, before the
-    # certified tail, so it inherits the freed slots at the next rotation
-    deferred = [n for n in workload.DEFERRED if n in workload.REGISTRY]
-    assert names[len(fresh) : len(fresh) + len(deferred)] == deferred
-    missing = [n for n in fresh + deferred if n not in workload.ORACLES]
-    assert not missing, f"prefix/deferred queries without oracles: {missing}"
+    root = os.path.join(os.path.dirname(__file__), "..")
+    certified: set[str] = set()
+    for path in glob.glob(os.path.join(root, "CORRECTNESS_r*.json")):
+        with open(path) as fh:
+            rows = json.load(fh)
+        certified.update(
+            n
+            for n, r in rows.items()
+            if isinstance(r, dict) and r.get("hash_match") is True
+        )
+    uncertified = sorted(n for n in QUERIES if n in ORACLES and n not in certified)
+    assert not uncertified, f"oracle-backed queries never certified: {uncertified}"

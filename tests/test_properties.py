@@ -76,6 +76,18 @@ def test_colocation_pair_symmetry(spark):
     assert pairs == {(b_, a_) for a_, b_ in pairs}
     assert all(a_ != b_ for a_, b_ in pairs)
 
+    # a tz-naive (TIMESTAMP_NTZ) ts column buckets to the same tw under the
+    # UTC session as the UTC-adjusted TIMESTAMP it was cast from
+    assert spark.conf.get("spark.sql.session.timeZone") == "UTC"
+    naive = e.select(
+        "user_id", "event_type", F.col("ts").cast("timestamp_ntz").alias("ts")
+    )
+    assert dict(naive.dtypes)["ts"] == "timestamp_ntz"
+    ts_str = F.date_format("ts", "yyyy-MM-dd HH:mm:ss.SSSSSS")
+    cols = ("user_id", "event_type", ts_str, "tw")
+    got = sorted(with_time_bucket(naive, "ts", 600).select(*cols).collect())
+    assert got == sorted(b.select(*cols).collect())
+
 
 def test_winner_uniqueness(spark):
     """Exactly one winner row per key (rank-1 uniqueness, SURVEY §5)."""

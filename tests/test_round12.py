@@ -329,49 +329,3 @@ def test_rank_kernel_plan_is_lazy_and_reuses_exchange(spark):
     ]
     assert reused, f"no reused range exchange in final plan:\n{final}"
     assert "BroadcastHashJoin" in final
-
-
-# ---------------------------------------------------------------------------
-# final-drain state: the round-13 rotation executed — DEFERRED is empty
-# and the prefix-50 holds exactly the last 50 never-certified names
-# ---------------------------------------------------------------------------
-
-
-def test_round13_rotation_drained_deferred():
-    """Durable end-state of the round-13 rotation (the final one):
-    DEFERRED is empty, the active prefix is exactly 50 names, and —
-    now that the driver's round-13 run certified that prefix — every
-    prefix name has a green CORRECTNESS row somewhere on disk, i.e.
-    the registry is 100% certified.
-
-    History: the original version asserted the prefix was DISJOINT
-    from every certified round, which was true at commit time and
-    falsified by the very artifact it awaited (CORRECTNESS_r13.json).
-    Round-state tests must assert durable invariants, never the
-    absence of a future artifact (DETERMINISM.md, round-14 lesson).
-    """
-    import json
-    import os
-
-    from epiteam_network_etl_functions_spark import workload
-
-    workload.load_all()
-    assert len(workload.DEFERRED) == 0
-    prefix = [n for n in workload.REGISTRY if n not in workload.DEMOTED]
-    assert len(prefix) == 50
-
-    # certification is complete: every prefix name has a green driver
-    # CORRECTNESS row in some round (r13 certified exactly this set)
-    root = os.path.join(os.path.dirname(__file__), "..")
-    certified: set[str] = set()
-    for fn in os.listdir(root):
-        if fn.startswith("CORRECTNESS_r") and fn.endswith(".json"):
-            rows = json.load(open(os.path.join(root, fn)))
-            certified.update(
-                n
-                for n, r in rows.items()
-                if isinstance(r, dict) and not r.get("err")
-            )
-    assert set(prefix) <= certified
-    # registry is fully partitioned: DEMOTED + prefix, no leftovers
-    assert set(workload.REGISTRY) == set(workload.DEMOTED) | set(prefix)

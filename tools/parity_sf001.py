@@ -6,7 +6,7 @@ registered queries and prints a one-line verdict per query, so a scale-
 sensitive divergence (row-count growth exposing a tie, overflow, etc.)
 surfaces before the driver sees it.
 
-Usage: python tools/parity_sf001.py [--prefix 50] [--only name,name]
+Usage: python tools/parity_sf001.py [--only name,name]
 """
 
 from __future__ import annotations
@@ -93,15 +93,12 @@ def _rows_equal(a, b):
 
 def main() -> int:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--prefix", type=int, default=None)
     ap.add_argument("--only", type=str, default=None)
     args = ap.parse_args()
 
     queries = entrymod.queries()
     oracles = entrymod.oracle_sql()
     names = list(queries)
-    if args.prefix:
-        names = names[: args.prefix]
     if args.only:
         names = [n for n in args.only.split(",") if n in queries]
 
