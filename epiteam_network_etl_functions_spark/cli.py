@@ -13,8 +13,9 @@ over the Spark plans:
 
 Stages are restartable exactly like the reference's ``side_results/``
 pattern: each stage writes parquet/npy/GraphML into ``--out`` and later
-stages re-read those files when run in a separate invocation
-(NetworkBuilder.py:264-284 stage graph; the IR between stages is files).
+stages re-read those files, in a separate invocation or in the same one
+(NetworkBuilder.py:264-284 stage graph; the IR between stages is files),
+so no stage re-plans an earlier stage's work.
 
 Input is either a real pings parquet (``--pings`` with columns caid,
 cdmx_datetime, latitude, longitude, horizontal_accuracy, plus ``--dim``
@@ -33,7 +34,7 @@ import sys
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .constants import SENTINEL_AGEB_13
-from .operators.colocation import colocation_edges
+from .operators.colocation import colocation_edges, pairs_from_edges
 from .operators.components import connected_components_star
 from .operators.contacts import group_sizes
 from .operators.graphs import (
@@ -48,7 +49,7 @@ from .operators.seir import run_gillespie_sweep, trajectory_stats
 from .operators.timebucket import with_time_bucket
 from .plans.contact_matrix import contact_prob_table, probs_to_matrix
 from .plans.mobility import (
-    attach_home,
+    attach_home,  # noqa: F401 -- unused here; perfbench traces cli.attach_home
     daily_home_winners,
     extract_day,
     impute_neighbour_frequency_labels,
@@ -91,8 +92,12 @@ def _read_or(spark: SparkSession, path: str, compute, what: str) -> DataFrame:
 
 
 def gen_tables(spark, args) -> dict[str, DataFrame]:
-    """Stage 1 (NetworkBuilder.get_tables): located pings -> homes ->
-    interactions; writes homes/interactions/located parquet."""
+    """Stage 1 (NetworkBuilder.get_tables): located pings -> interactions
+    -> homes; writes located/interactions/homes parquet in that order and
+    returns the three files re-read, so later stages consume the IR a
+    restart would read and the co-location self-join runs once. The
+    co-location reads only (caid, cell, tw), so no home attach (and none
+    of the home-inference chain) enters its plan."""
     pings, dim, cell_expr = _load_inputs(spark, args)
     if args.day == "all":
         # multi-day run (S3 trusted-range shape): accuracy gate only
@@ -101,20 +106,22 @@ def gen_tables(spark, args) -> dict[str, DataFrame]:
         sliced = extract_day(pings, args.day, min_accuracy=args.min_accuracy)
     day = with_cells(sliced, out_col="h3index_15", cell_expr=cell_expr)
     located = locate_pings(day, dim).cache()
+    located.write.mode("overwrite").parquet(_out(args, "located.parquet"))
+    interactions = colocation_edges(
+        with_time_bucket(located, "cdmx_datetime", args.bucket_seconds),
+        id_col="caid", cell_col="h3index_15", tw_col="tw",
+    )
+    # sorted runs compress to a fraction of the plan's arbitrary order
+    interactions.sortWithinPartitions("a_caid", "b_caid").write.mode(
+        "overwrite"
+    ).parquet(_out(args, "interactions.parquet"))
+    interactions = spark.read.parquet(_out(args, "interactions.parquet"))
     scores = night_presence_scores(located, bucket_seconds=args.bucket_seconds)
     winners = daily_home_winners(scores)
     homes = (
         locate_pings(winners.withColumnRenamed("home_cell", "h3index_15"), dim)
         .withColumn("home_ageb", F.coalesce(F.col("cve_geo"), F.lit(SENTINEL_AGEB_13)))
         .select("caid", "home_ageb", "score", "confidence")
-    )
-    bucketed = with_time_bucket(
-        attach_home(located, homes.select("caid", "home_ageb")),
-        "cdmx_datetime",
-        args.bucket_seconds,
-    )
-    interactions = colocation_edges(
-        bucketed, id_col="caid", cell_col="h3index_15", tw_col="tw"
     )
     if args.impute_rounds > 0:
         comp = connected_components_star(interactions, a_col="a_caid", b_col="b_caid")
@@ -126,6 +133,7 @@ def gen_tables(spark, args) -> dict[str, DataFrame]:
     if args.quality_gate:
         # Declarative stage gate (the reference's logged sanity counts,
         # SURVEY.md §5, as enforced invariants): one agg pass per table.
+        # It runs before homes.parquet, the file a restart checks for.
         from .operators.quality import assert_rules, matches, not_null, unique
 
         assert_rules(homes, [unique("caid"), not_null("home_ageb"),
@@ -134,31 +142,37 @@ def gen_tables(spark, args) -> dict[str, DataFrame]:
         print("# gen-tables: quality gate passed (homes unique/13-char, "
               "interactions non-null)", file=sys.stderr)
     homes.write.mode("overwrite").parquet(_out(args, "homes.parquet"))
-    interactions.write.mode("overwrite").parquet(_out(args, "interactions.parquet"))
-    located.write.mode("overwrite").parquet(_out(args, "located.parquet"))
-    print(f"# gen-tables: wrote homes/interactions/located under {args.out}",
+    located.unpersist()
+    print(f"# gen-tables: wrote located/interactions/homes under {args.out}",
           file=sys.stderr)
-    return {"located": located, "homes": homes, "interactions": interactions}
+    return {
+        name: spark.read.parquet(_out(args, f"{name}.parquet"))
+        for name in ("located", "homes", "interactions")
+    }
 
 
 def prob_matrix(spark, args, tables: dict | None) -> DataFrame:
     """Stage 2 (get_total_vs_observed + get_probs_matrix): long probs table
-    + dense .npy matrix."""
-    if tables:
-        located, homes = tables["located"], tables["homes"]
-    else:
-        homes = _read_or(spark, _out(args, "homes.parquet"), lambda: None, "homes")
-        located = _read_or(spark, _out(args, "located.parquet"), lambda: None, "located")
-        if homes is None or located is None:
+    + dense .npy matrix. Observed contacts count both orientations of the
+    interactions IR, so no co-location self-join runs here; the matrix
+    and the returned frame are read back from contact_probs.parquet."""
+    if not tables:
+        tables = {
+            name: _read_or(spark, _out(args, f"{name}.parquet"), lambda: None, name)
+            for name in ("homes", "located", "interactions")
+        }
+        if any(t is None for t in tables.values()):
             sys.exit("prob-matrix needs gen-tables outputs (run --gen-tables first)")
     # contact_prob_table attaches homes itself (via observed_contacts); a
     # pre-join here would be a pure wasted shuffle of the located facts.
     probs = contact_prob_table(
-        located,
-        homes.select("caid", "home_ageb"),
+        tables["located"],
+        tables["homes"].select("caid", "home_ageb"),
         bucket_seconds=args.bucket_seconds,
+        pairs=pairs_from_edges(tables["interactions"], id_col="caid"),
     )
     probs.write.mode("overwrite").parquet(_out(args, "contact_probs.parquet"))
+    probs = spark.read.parquet(_out(args, "contact_probs.parquet"))
     labels, matrix = probs_to_matrix(probs, "a_home_ageb", "b_home_ageb")
     write_matrix_npy(_out(args, "probs_matrix.npy"), matrix)
     with open(_out(args, "probs_labels.json"), "w") as f:
@@ -394,9 +408,13 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--min-accuracy", type=float, default=100.0)
     p.add_argument("--quality-gate", action="store_true",
                    help="enforce stage invariants (operators/quality) "
-                        "before writing gen-tables IR")
+                        "before writing homes.parquet; located and "
+                        "interactions parquet are written before the gate")
     p.add_argument("--bucket-seconds", type=int, default=600)
-    p.add_argument("--impute-rounds", type=int, default=6)
+    p.add_argument("--impute-rounds", type=int, default=6,
+                   help="neighbour-frequency imputation over co-location "
+                        "components: 0 disables it; any positive value "
+                        "gives the same one-pass result")
     p.add_argument("--scale", type=int, default=1000, help="network node count")
     p.add_argument(
         "--graphml-max-edges", type=int, default=5_000_000,

@@ -85,3 +85,12 @@ def colocation_edges(
         .groupBy(f"a_{id_col}", f"b_{id_col}")
         .agg(F.countDistinct(tw_col).alias(weight_col))
     )
+
+
+def pairs_from_edges(edges: DataFrame, id_col: str = "caid") -> DataFrame:
+    """``colocation_pairs`` read off ``colocation_edges`` output instead of
+    a second self-join: the edges are distinct and canonical (a < b), so
+    both orientations together are exactly the distinct ordered pairs."""
+    a, b = f"a_{id_col}", f"b_{id_col}"
+    fwd = edges.select(a, b)
+    return fwd.unionByName(fwd.select(F.col(b).alias(a), F.col(a).alias(b)))

@@ -4,17 +4,17 @@ The reference consumes `connected_component` arrays for neighbour-frequency
 imputation (home_ageb_imputers.py:120-206) but builds them with networkx on
 one machine. This kernel computes them on the cluster: iterative min-label
 propagation (each node adopts the smallest id reachable in one hop;
-converges in O(diameter) rounds; the large-star/small-star optimization is
-the known upgrade for pathological diameters).
+converges in O(diameter) rounds); ``connected_components_star`` is the
+large-star/small-star upgrade for pathological diameters.
 
-Each round is one join + one aggregation on the edge list — no driver-side
-graph. Convergence is checked with a cheap changed-count aggregate; state
-is cached and the previous round unpersisted.
+Each min-label round is one join + one aggregation on the edge list — no
+driver-side graph. Convergence is checked with a cheap changed-count
+aggregate; state is checkpointed and the previous round unpersisted.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Observation, Window, functions as F
 
 
 def undirected_adjacency(edges: DataFrame, a_col: str, b_col: str) -> DataFrame:
@@ -111,19 +111,39 @@ def connected_components_star(
     O(diameter) (``connected_components``): a 10⁵-node path graph converges
     in ~17 rounds here where min-label needs 10⁵.
 
-    Each round is two map-side star operations, each one groupBy over the
-    current edge set:
+    Each round is two star operations over the current edge set, each
+    reading its per-node minimum from a ``min(v) OVER (PARTITION BY u)``
+    window instead of a groupBy joined back to the edges:
 
     - large-star: for every node u, point every *larger* neighbour at
       m = min(Γ(u) ∪ {u}).
     - small-star: orient edges downward (u ≥ v); point u and all its
-      smaller neighbours at their minimum.
+      smaller neighbours at their minimum — both edges of a row come out
+      of one ``explode``.
+
+    Only the round's output is deduplicated (duplicates cannot change a
+    minimum, so the large-star output goes into small-star as is).
+
+    Skew trade-off of the window: a groupBy pre-aggregates map-side, so a
+    hub's minimum ships as one partial row per task, while the window
+    sends a hub's whole neighbourhood to one task (sorted, spillable, and
+    not splittable by AQE's skew-join handling). On co-location graphs
+    degree is bounded by the devices sharing a (cell, bucket), and the
+    window saves the join-back and its jobs every round; for graphs with
+    a few million-degree hubs the groupBy+join form would balance better.
 
     Convergence: the edge set is a fixpoint (star forests centred on each
     component's min id). Checked with an order-independent fingerprint
     (count + bit_xor of xxhash64(u, v) — xor, not sum, so ANSI-mode
-    overflow is impossible) in one aggregate per round. State is
-    localCheckpointed per round so plans stay O(1) across iterations.
+    overflow is impossible), taken with ``DataFrame.observe`` on the
+    round's eager localCheckpoint — the checkpoint job that materializes
+    the edges also yields the fingerprint, so convergence adds no job.
+    Checkpointing per round keeps plans O(1) across iterations.
+
+    Labels come straight from the fixpoint star forest: each edge
+    (u, v) says member u belongs to the component of root v, and each
+    root labels itself. The returned frame is a lazy projection of the
+    checkpointed fixpoint.
 
     Replaces the driver-side networkx components the reference consumes for
     neighbour-frequency imputation (home_ageb_imputers.py:120-206) at any
@@ -136,59 +156,52 @@ def connected_components_star(
         if t not in comparable:
             raise ValueError(f"node id column {f.name} has unordered type {t}")
 
-    e = (
+    def checkpoint(df: DataFrame) -> tuple[DataFrame, tuple[int, int]]:
+        obs = Observation()
+        out = df.observe(
+            obs,
+            F.count(F.lit(1)).alias("n"),
+            F.coalesce(F.expr("bit_xor(xxhash64(u, v))"), F.lit(0)).alias("h"),
+        ).localCheckpoint()
+        return out, (int(obs.get["n"]), int(obs.get["h"]))
+
+    e, prev = checkpoint(
         edges.select(F.col(a_col).alias("u"), F.col(b_col).alias("v"))
         .where(F.col("u") != F.col("v"))
         .where(F.col("u").isNotNull() & F.col("v").isNotNull())
         .distinct()
-        .localCheckpoint()
     )
-    all_nodes = (
-        e.select(F.col("u").alias("node_id"))
-        .unionByName(e.select(F.col("v").alias("node_id")))
-        .distinct()
-        .localCheckpoint()
-    )
-
-    def fingerprint(df: DataFrame) -> tuple[int, int]:
-        row = df.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.coalesce(F.expr("bit_xor(xxhash64(u, v))"), F.lit(0)).alias("h"),
-        ).collect()[0]
-        return int(row["n"]), int(row["h"])
-
-    prev = fingerprint(e)
     converged = False
     for _ in range(max_iterations):
         # large-star over the symmetric neighbourhood
         sym = e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        mins = sym.groupBy("u").agg(
-            F.least(F.min("v"), F.first("u")).alias("m")
-        )
         large = (
-            sym.join(mins, "u")
-            .where(F.col("v") > F.col("u"))
+            sym.withColumn(
+                "m", F.least(F.min("v").over(Window.partitionBy("u")), F.col("u"))
+            )
+            .where(F.col("v") > F.col("u"))  # so v > u >= m: never a loop
             .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .where(F.col("u") != F.col("v"))
-            .distinct()
         )
-        # small-star over downward-oriented edges
+        # small-star over downward-oriented edges: (u, v) -> (v, m), (u, m)
         down = large.select(
             F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
         )
-        smins = down.groupBy("u").agg(F.min("v").alias("m"))
-        joined = down.join(smins, "u")
+        star = F.explode(
+            F.array(
+                F.struct(F.col("v").alias("u"), F.col("m").alias("v")),
+                F.struct(F.col("u").alias("u"), F.col("m").alias("v")),
+            )
+        )
         small = (
-            joined.where(F.col("v") != F.col("m"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .unionByName(joined.select("u", F.col("m").alias("v")))
+            down.withColumn("m", F.min("v").over(Window.partitionBy("u")))
+            .select(star.alias("__e"))
+            .select("__e.u", "__e.v")
             .where(F.col("u") != F.col("v"))
             .distinct()
-            .localCheckpoint()
         )
+        nxt, cur = checkpoint(small)
         e.unpersist()
-        e = small
-        cur = fingerprint(e)
+        e = nxt
         if cur == prev:
             converged = True
             break
@@ -198,22 +211,9 @@ def connected_components_star(
             f"connected_components_star did not converge in {max_iterations} "
             "rounds — pathological input (expected O(log n) rounds)"
         )
-    # Fixpoint edges are (member -> component min). Min nodes label themselves.
-    labels = (
-        all_nodes.join(
-            e.select(F.col("u").alias("node_id"), F.col("v").alias("__comp")),
-            "node_id",
-            "left",
-        )
-        .select(
-            "node_id",
-            F.coalesce(F.col("__comp"), F.col("node_id")).alias("component_id"),
-        )
-    )
-    out = labels.localCheckpoint()
-    e.unpersist()
-    all_nodes.unpersist()
-    return out
+    members = e.select(F.col("u").alias("node_id"), F.col("v").alias("component_id"))
+    roots = e.select(F.col("v").alias("node_id"), F.col("v").alias("component_id"))
+    return members.unionByName(roots.distinct())
 
 
 def components_as_arrays(

@@ -2,7 +2,7 @@
 
     raw pings -> day extract -> hex cells -> geo attribution
               -> night presence scores -> daily winners -> global winner
-              -> sentinel attach -> co-location interactions
+              -> sentinel-filled homes -> co-location interactions
               -> contact-probability table -> (driver-sized) SBM network
               -> SEIR trajectory
 
@@ -19,13 +19,12 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..operators.colocation import colocation_edges, colocation_pairs
+from ..operators.colocation import colocation_edges, pairs_from_edges
 from ..operators.components import components_as_arrays, connected_components_star
 from ..operators.graphs import sample_nodes, sbm_edges, scale_sizes
 from ..operators.timebucket import with_time_bucket
 from .contact_matrix import contact_prob_table
 from .mobility import (
-    attach_home,
     daily_home_winners,
     extract_day,
     impute_neighbour_frequency,
@@ -100,17 +99,16 @@ def run_pipeline(
         .withColumn("home_ageb", F.coalesce(F.col("cve_geo"), F.lit(SENTINEL_AGEB_13)))
         .select("caid", "home_ageb", "score", "confidence")
     )
-    with_home = attach_home(located, homes.select("caid", "home_ageb"))
 
-    bucketed = with_time_bucket(with_home, "cdmx_datetime", cfg.bucket_seconds)
-    # ONE co-location presence join feeds both the empiric edge list and
-    # the observed-contacts stage of the probability pipeline.
-    pairs = colocation_pairs(
-        bucketed, id_col="caid", cell_col="h3index_15", tw_col="tw"
-    ).cache()
+    # ONE co-location self-join feeds the empiric edge list, the component
+    # kernel and (both orientations of the canonical edges) the
+    # observed-contacts stage of the probability pipeline. It reads only
+    # (caid, cell, tw), so no home attach enters its plan.
+    bucketed = with_time_bucket(located, "cdmx_datetime", cfg.bucket_seconds)
     interactions = colocation_edges(
         bucketed, id_col="caid", cell_col="h3index_15", tw_col="tw"
-    )
+    ).cache()
+    pairs = pairs_from_edges(interactions, id_col="caid")
 
     if cfg.impute_rounds > 0:
         # Sentinel homes inherit the modal home of their co-location
@@ -126,10 +124,9 @@ def run_pipeline(
             components_as_arrays(comp_labels),
             rounds=cfg.impute_rounds,
         )
-        with_home = attach_home(located, homes.select("caid", "home_ageb"))
 
     probs = contact_prob_table(
-        with_home.drop("home_ageb"),
+        located,
         homes.select("caid", "home_ageb"),
         bucket_seconds=cfg.bucket_seconds,
         checkpoint_dir=cfg.checkpoint_dir,

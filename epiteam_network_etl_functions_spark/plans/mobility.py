@@ -294,11 +294,62 @@ def impute_neighbour_frequency_labels(
     components_as_arrays ceiling is off the product path entirely. The
     component id (the component's min node id) is deterministic, and it is
     only a grouping key: the fill choice per component is (count DESC,
-    home ASC), so arrays and labels entry points yield identical output."""
+    home ASC), so arrays and labels entry points yield identical output.
+
+    One lazy pass, no job at plan build: long labels give every node ONE
+    component, so the components partition the devices and round 1 is
+    already the fixpoint — a device still missing after it sits in a
+    component with no real home, which no later round can change (the
+    closed form the ``pings_impute_neighbours`` oracle states).
+    ``rounds`` <= 0 disables the fill; any positive value gives the
+    one-pass result. The arrays entry point keeps its round loop, because
+    array components may overlap."""
+    if rounds <= 0:
+        return homes
     member = labels.select(
         F.col(comp_col).alias("__comp_id"), F.col(node_col).alias(id_col)
     )
-    return _impute_by_member(homes, member, id_col, home_col, sentinel, rounds)
+    fill = _neighbour_fill(homes, member, id_col, home_col, sentinel)
+    return _apply_fill(homes, fill, id_col, home_col, sentinel).select(*homes.columns)
+
+
+def _neighbour_fill(
+    cur: DataFrame, member: DataFrame, id_col: str, home_col: str, sentinel: str
+) -> DataFrame:
+    """(id, __fill): each sentinel device's modal real home among its
+    component members (count DESC, home ASC), the smallest fill when a
+    device sits in several components."""
+    with_comp = cur.join(member, id_col, "left")
+    freq = (
+        with_comp.where(F.col(home_col) != sentinel)
+        .groupBy("__comp_id", home_col)
+        .agg(F.count(F.lit(1)).alias("n"))
+    )
+    best = top1_per_key(freq, ["__comp_id"], [F.desc("n"), F.asc(home_col)])
+    fill = (
+        cur.where(F.col(home_col) == sentinel)
+        .select(id_col)
+        .join(member, id_col)
+        .join(best.select("__comp_id", F.col(home_col).alias("__fill")), "__comp_id")
+        .select(id_col, "__fill")
+    )
+    return top1_per_key(fill, [id_col], [F.asc("__fill")])
+
+
+def _apply_fill(
+    cur: DataFrame, fill: DataFrame, id_col: str, home_col: str, sentinel: str
+) -> DataFrame:
+    return (
+        cur.join(fill, id_col, "left")
+        .withColumn(
+            home_col,
+            F.when(
+                (F.col(home_col) == sentinel) & F.col("__fill").isNotNull(),
+                F.col("__fill"),
+            ).otherwise(F.col(home_col)),
+        )
+        .drop("__fill")
+    )
 
 
 def _impute_by_member(
@@ -313,27 +364,13 @@ def _impute_by_member(
     prev_cached = None
     for _ in range(rounds):
         cur = cur.cache()
-        missing = cur.where(F.col(home_col) == sentinel)
-        empty = missing.isEmpty()
+        empty = cur.where(F.col(home_col) == sentinel).isEmpty()
         if prev_cached is not None:
             prev_cached.unpersist()
         prev_cached = cur
         if empty:
             break
-        with_comp = cur.join(member, id_col, "left")
-        freq = (
-            with_comp.where(F.col(home_col) != sentinel)
-            .groupBy("__comp_id", home_col)
-            .agg(F.count(F.lit(1)).alias("n"))
-        )
-        best = top1_per_key(freq, ["__comp_id"], [F.desc("n"), F.asc(home_col)])
-        fill = (
-            missing.select(id_col)
-            .join(member, id_col)
-            .join(best.select("__comp_id", F.col(home_col).alias("__fill")), "__comp_id")
-            .select(id_col, "__fill")
-        )
-        fill = top1_per_key(fill, [id_col], [F.asc("__fill")]).cache()
+        fill = _neighbour_fill(cur, member, id_col, home_col, sentinel).cache()
         # Fixpoint check on FILL, not just missing: devices in all-sentinel
         # components stay missing forever, and without this exit the loop
         # would run every remaining round as a no-op — each one nesting the
@@ -341,15 +378,5 @@ def _impute_by_member(
         # the analyzer's heap long before the data is large.
         if fill.isEmpty():
             break
-        cur = (
-            cur.join(fill, id_col, "left")
-            .withColumn(
-                home_col,
-                F.when(
-                    (F.col(home_col) == sentinel) & F.col("__fill").isNotNull(),
-                    F.col("__fill"),
-                ).otherwise(F.col(home_col)),
-            )
-            .drop("__fill")
-        )
+        cur = _apply_fill(cur, fill, id_col, home_col, sentinel)
     return cur

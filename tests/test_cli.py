@@ -7,6 +7,8 @@ from __future__ import annotations
 import json
 import os
 
+import pytest
+
 from epiteam_network_etl_functions_spark import cli
 from conftest import PARITY_SF_DIR
 
@@ -34,6 +36,10 @@ def _args(out: str, extra: list[str] | None = None):
     )
 
 
+def _plan(df) -> str:
+    return df._jdf.queryExecution().optimizedPlan().toString()
+
+
 def test_cli_stages_end_to_end(spark, tmp_path):
     out = str(tmp_path / "run")
     os.makedirs(out)
@@ -46,10 +52,16 @@ def test_cli_stages_end_to_end(spark, tmp_path):
     for name in ("homes.parquet", "interactions.parquet", "located.parquet"):
         assert os.path.exists(os.path.join(out, name))
 
+    # every stage hands on the IR files, so later plans are plain scans
+    # and the co-location self-join ran once, inside gen-tables
+    for name, df in tables.items():
+        assert _plan(df).startswith("Relation "), name
+
     probs = cli.prob_matrix(spark, args, tables)
     assert set(probs.columns) == {
         "a_home_ageb", "b_home_ageb", "total_pairs", "observed", "prob"
     }
+    assert _plan(probs).startswith("Relation ")
     labels = json.load(open(os.path.join(out, "probs_labels.json")))
     assert len(labels) > 0
     assert os.path.exists(os.path.join(out, "probs_matrix.npy"))
@@ -105,18 +117,41 @@ def test_cli_seir_distributed_switch(spark, tmp_path):
         assert f.readline().strip() == "t,avg_I,std_I,n_runs"
 
 
-def test_cli_stage_restart_reads_prior_ir(spark, tmp_path):
+def test_cli_stage_restart_reads_prior_ir(spark, tmp_path, capsys):
     """A later stage in a fresh invocation reuses the parquet IR."""
     out = str(tmp_path / "run2")
     os.makedirs(out)
     args = _args(out)
     cli.gen_tables(spark, args)
-    # no in-memory tables passed: must read homes/located from disk
+    # no in-memory tables passed: must read homes/located/interactions
+    # from disk, and the observed contacts equal the ones a fresh
+    # co-location self-join over the located pings gives
+    from epiteam_network_etl_functions_spark.plans.contact_matrix import (
+        contact_prob_table,
+    )
+
     probs = cli.prob_matrix(spark, args, None)
+    err = capsys.readouterr().err
+    for name in ("homes", "located", "interactions"):
+        assert f"# {name}: reusing {os.path.join(out, name)}.parquet" in err
+    located = spark.read.parquet(os.path.join(out, "located.parquet"))
+    homes = spark.read.parquet(os.path.join(out, "homes.parquet"))
+    fresh = contact_prob_table(
+        located, homes.select("caid", "home_ageb"),
+        bucket_seconds=args.bucket_seconds,
+    )
     assert probs.count() > 0
+    assert sorted(probs.collect()) == sorted(fresh.select(*probs.columns).collect())
     cli.rg_stage(spark, args, None)
     with open(os.path.join(out, "rg_by_mun.csv")) as f:
         assert f.readline().strip() == "cve_mun,avg_rg,std_rg,n_devices"
+
+    # without the interactions IR a --prob-matrix restart cannot run
+    import shutil
+
+    shutil.rmtree(os.path.join(out, "interactions.parquet"))
+    with pytest.raises(SystemExit, match="run --gen-tables first"):
+        cli.prob_matrix(spark, args, None)
 
 
 def test_cli_corpus_stage(spark, tmp_path):

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+from hypothesis import HealthCheck, given, settings, strategies as st
 from pyspark.sql import Row
 
 from epiteam_network_etl_functions_spark.constants import SENTINEL_AGEB_13
@@ -90,3 +91,39 @@ def test_star_components_path_graph_log_rounds(spark):
         F.max("component_id").alias("maxc"),
     ).collect()[0]
     assert (agg["n"], agg["ncomp"], agg["minc"], agg["maxc"]) == (n, 1, 0, 0)
+
+
+def _labels(df) -> dict:
+    return {r["node_id"]: r["component_id"] for r in df.collect()}
+
+
+@given(
+    st.lists(
+        st.tuples(st.integers(0, 30), st.integers(0, 30)), min_size=1, max_size=40
+    )
+)
+@settings(max_examples=8, deadline=None,
+          suppress_health_check=[HealthCheck.too_slow])
+def test_star_components_equal_min_label_property(spark, pairs):
+    """The window/observe star kernel labels every node exactly as
+    min-label propagation does, duplicate and reversed edges included
+    (self-loops are dropped: the star kernel leaves loop-only nodes out)."""
+    edges = spark.createDataFrame(
+        [(a, b) for a, b in pairs if a != b], "a_id long, b_id long"
+    )
+    assert _labels(connected_components_star(edges)) == _labels(
+        connected_components(edges, max_iterations=60)
+    )
+
+
+def test_star_components_equal_min_label_on_scrambled_path(spark):
+    # a 40-node path whose ids are shuffled, so the component minimum sits
+    # mid-path and both kernels need more than a single round
+    import random
+
+    ids = list(range(100, 140))
+    random.Random(3).shuffle(ids)
+    edges = spark.createDataFrame(list(zip(ids, ids[1:])), ["a_id", "b_id"])
+    star = _labels(connected_components_star(edges))
+    assert star == _labels(connected_components(edges, max_iterations=60))
+    assert set(star.values()) == {100}

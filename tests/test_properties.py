@@ -5,7 +5,7 @@ from __future__ import annotations
 
 import datetime as dt
 
-from hypothesis import given, settings, strategies as st
+from hypothesis import HealthCheck, given, settings, strategies as st
 from pyspark.sql import Row, functions as F
 
 from epiteam_network_etl_functions_spark.calendar_utils import (
@@ -13,6 +13,7 @@ from epiteam_network_etl_functions_spark.calendar_utils import (
     trusted_range,
     ymd_parts,
 )
+from epiteam_network_etl_functions_spark.constants import SENTINEL_AGEB_13
 
 # ---- pure-python properties (hypothesis) -----------------------------------
 
@@ -87,6 +88,86 @@ def test_colocation_pair_symmetry(spark):
     cols = ("user_id", "event_type", ts_str, "tw")
     got = sorted(with_time_bucket(naive, "ts", 600).select(*cols).collect())
     assert got == sorted(b.select(*cols).collect())
+
+
+def test_interactions_both_orientations_equal_colocation_pairs(spark):
+    """pairs_from_edges(colocation_edges) is exactly colocation_pairs, on
+    the located pings alone and on the old home-attached input of a
+    two-day ('all') run whose homes hold one row per (device, day) — so
+    dropping the attach and the second self-join changes no pair."""
+    import random
+
+    from epiteam_network_etl_functions_spark.operators.colocation import (
+        colocation_edges,
+        colocation_pairs,
+        pairs_from_edges,
+    )
+    from epiteam_network_etl_functions_spark.operators.timebucket import (
+        with_time_bucket,
+    )
+    from epiteam_network_etl_functions_spark.plans.mobility import attach_home
+
+    rng = random.Random(11)
+    base = dt.datetime(2020, 1, 14, 21, 0)
+    located = spark.createDataFrame(
+        [
+            Row(caid=f"d{rng.randrange(25)}", h3index_15=f"c{rng.randrange(6)}",
+                cdmx_datetime=base + dt.timedelta(minutes=rng.randrange(2 * 1440)))
+            for _ in range(400)
+        ]
+    )
+    homes = (
+        located.groupBy("caid", F.to_date("cdmx_datetime").alias("day"))
+        .agg(F.min("h3index_15").alias("home_ageb"))
+    )
+    assert homes.groupBy("caid").count().where("count > 1").count() > 0
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.select("a_caid", "b_caid").collect())
+
+    got = rows(pairs_from_edges(colocation_edges(
+        with_time_bucket(located, "cdmx_datetime", 600))))
+    assert len(got) == len(set(got)) > 0
+    for pings in (located, attach_home(located, homes)):
+        assert got == rows(colocation_pairs(
+            with_time_bucket(pings, "cdmx_datetime", 600)))
+
+
+@given(
+    st.lists(
+        st.tuples(
+            st.one_of(st.none(), st.integers(0, 3)),
+            st.sampled_from([SENTINEL_AGEB_13, SENTINEL_AGEB_13,
+                             "0901200010010", "1501200010020"]),
+        ),
+        min_size=1,
+        max_size=14,
+    )
+)
+@settings(max_examples=8, deadline=None,
+          suppress_health_check=[HealthCheck.too_slow])
+def test_one_pass_label_imputation_equals_round_loop(spark, devices):
+    """Long labels partition the devices (component None = no co-location
+    edge), so the one-pass labels imputation equals the six-round loop."""
+    from epiteam_network_etl_functions_spark.plans.mobility import (
+        _impute_by_member,
+        impute_neighbour_frequency_labels,
+    )
+
+    homes = spark.createDataFrame(
+        [(f"d{i}", home, i) for i, (_, home) in enumerate(devices)],
+        "caid string, home_ageb string, score int",
+    )
+    labels = spark.createDataFrame(
+        [(f"d{i}", f"k{comp}") for i, (comp, _) in enumerate(devices)
+         if comp is not None],
+        "node_id string, component_id string",
+    )
+    member = labels.selectExpr("component_id AS __comp_id", "node_id AS caid")
+    one_pass = impute_neighbour_frequency_labels(homes, labels)
+    assert one_pass.columns == homes.columns
+    looped = _impute_by_member(homes, member, "caid", "home_ageb", SENTINEL_AGEB_13, 6)
+    assert sorted(one_pass.collect()) == sorted(looped.select(*homes.columns).collect())
 
 
 def test_winner_uniqueness(spark):
